@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiling entry (not part of the driver contract). */
 object Scratch {
   def main(args: Array[String]): Unit = {
@@ -10,20 +8,7 @@ object Scratch {
       graft.util.HeapWarm.pretouch()
       println(f"[scratch] pretouch ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SCRATCH_MAXPART", "1m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SCRATCH_OPENCOST", "4194304"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.GraftSession()
     val d = sys.env.getOrElse("SCRATCH_SF_DIR", "/root/testdata/sf0.1")
     // SCRATCH_JOBS=1: print every job's wall/tasks — attributes a
     // query's wall to its driver-scheduled job sequence (round loops,
@@ -101,19 +86,11 @@ object Scratch {
     }
     val only = sys.env.get("SCRATCH_ONLY").map(_.split(",").toSet)
     val reps = sys.env.getOrElse("SCRATCH_REPS", "1").toInt
-    val explain = sys.env.contains("SCRATCH_EXPLAIN")
     for {
       _ <- 1 to reps
       (name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
       if name != "berlinmod_e2e" && only.forall(_.contains(name))
-    } {
-      if (explain) {
-        println(s"===== $name =====")
-        println(fn(spark, d).queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString(
-            sys.env.getOrElse("SCRATCH_EXPLAIN_MODE", "formatted"))))
-      } else time(name) { fn(spark, d).count() }
-    }
+    } time(name) { fn(spark, d).count() }
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.util.Json.{str => q}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,49 +10,10 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // heap pre-touch before Spark threads exist (see HeapWarm scaladoc)
     graft.util.HeapWarm.pretouch()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet has shipped as TIMESTAMP(NANOS), NTZ micros, and
-      // UTC micros across driver regenerations; nanosAsLong keeps the
-      // nanos encoding readable and Tables.events normalizes every
-      // encoding to TimestampType
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // the driver-generated tables are single small parquet files; split
-      // them finer so scans parallelize across all local cores
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      // AQE coalescing targets bytes-per-partition; our temporal/pair
-      // stages are compute-heavy on byte-tiny rows, so coalescing to one
-      // partition serializes them — keep the requested parallelism
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // k-bounded TopKOrdered aggregates (the ANN family) must HASH, not
-      // sort-fall-back, when grouping by n vectors: the default 128-key
-      // fallback threshold turns the graph build's bounded partial agg
-      // into a full-stream sort (2.7 GB spill at 50k vectors, disk-death
-      // at 5M) where the hash map costs ~400 B per group
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.GraftSession()
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // The driver parses BARE STDOUT (proven by BENCH_r02: outputStrategy :=
     // StdoutOutput in build.sbt keeps it prefix-free). Mirror the Bench
     // pattern exactly: one JSON line per query as it completes, plus ONE

@@ -1,7 +1,5 @@
 package graft.berlinmod
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-curve probe for the trip-pair queries: loads BerlinMOD at a
   * given fleet multiplier (1x = the reference's brussels scale, 141
   * vehicles) and times q6/q10/q16/q17 — the four queries whose cost
@@ -13,16 +11,7 @@ object BmScaleProbe {
     val mult = if (args.nonEmpty) args(0).toInt else 10
     val passes = if (args.length > 1) args(1).toInt else 2
     graft.util.HeapWarm.pretouch()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.GraftSession()
     val tL0 = System.nanoTime()
     BerlinMod.load(spark, nVehicles = 141 * mult,
       tripsMin = 9, tripsMax = 14, ptsMin = 30, ptsMax = 120)

@@ -1,7 +1,5 @@
 package graft.scale
 
-import org.apache.spark.sql.SparkSession
-
 /** Build-only probe for the scaled navigable-graph constructions —
   * isolates the EDGE BUILD (the corpus-shaped exchange the r13 verdict
   * targets) from the search walk the gate entries also time, so the
@@ -18,32 +16,14 @@ object GraphBuildProbe {
     val which: Set[String] =
       if (args.length > 1) args(1).split(",").toSet else Set("exact", "sq8")
     graft.util.HeapWarm.pretouch()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // partition scaling + hash-aggregate threshold: the
-    // PipelineScaleProbe decade rules, verbatim (same rationale)
-    // ...extended one more step at the fourth decade: 128 partitions
-    // put ~85 MB of shuffle in each task's sorter at 20M vectors and
-    // spilled ~2 GB; 8x returns per-task working sets to memory (the
-    // same more-tasks-not-bigger-ones rule, measured both ways in
-    // tools/gbuild_r14.json)
-    val shufParts =
-      if (mult >= 400) (cpus.toInt * 8).toString
-      else if (mult >= 100) (cpus.toInt * 4).toString
-      else cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.rdd.compress", "true")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.util.GraftSession.defaultCpus
+    // the PipelineScaleProbe decade rule, one step further at the fourth
+    // decade: 4x partitions put ~85 MB of shuffle in each task's sorter
+    // at 20M vectors and spilled ~2 GB; 8x returns per-task working sets
+    // to memory (measured both ways in tools/gbuild_r14.json)
+    val spark = PipelineScaleProbe.decadeSession(cpus,
+      if (mult >= 400) cpus * 8
+      else PipelineScaleProbe.decadePartitions(cpus, mult))
     val dir = s"/tmp/graft_synth_${mult}x"
     // the builds read only embeddings — don't write a 400x lineitem
     SynthCorpus.generateEmbeddings(spark, mult, dir)

@@ -16,19 +16,12 @@ object JaccardPhaseProbe {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/tmp/graft_synth_1000x"
     graft.util.HeapWarm.pretouch()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", (cpus.toInt * 4).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.rdd.compress", "true")
-      .config("spark.cleaner.periodicGC.interval", "30s")
+    val cpus = graft.util.GraftSession.defaultCpus
+    // the decade rule at the 1000x dirs this probe profiles
+    val spark = graft.util.GraftSession.builder(cpus)
+      .config("spark.sql.shuffle.partitions",
+        PipelineScaleProbe.decadePartitions(cpus, 1000).toString)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.register(spark)
     val metrics = new graft.util.BenchMetricsListener
     spark.sparkContext.addSparkListener(metrics)

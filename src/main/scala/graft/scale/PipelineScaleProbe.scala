@@ -176,6 +176,29 @@ object PipelineScaleProbe {
     // a ~36B-candidate join
   }
 
+  /** Shuffle partitions for a synth decade: `cpus` up to 10x, 4x that
+    * from 100x. At 1000x a `cpus`-partition shuffle puts ~500 MB in each
+    * task's sorter against ~450 MB of execution memory, so every sort
+    * and sort-fallback aggregate spills its input; 4x partitions put the
+    * per-task working sets back in memory at the same shuffle bytes —
+    * how a cluster absorbs a decade: more tasks, not bigger ones. From
+    * 100x the rule also keeps the graph build's per-task group count
+    * (~n·(P+1)/parts) inside the 1M hash-aggregate threshold. */
+  def decadePartitions(cpus: Int, mult: Int): Int =
+    if (mult >= 100) cpus * 4 else cpus
+
+  /** The vector-build probes' session: `shufflePartitions`, plus a 1M
+    * hash-aggregate fallback threshold so the k-bounded TopKOrdered
+    * graph builds over 5M vectors HASH (~400 B per group) instead of
+    * falling back to a full-stream sort (2.7 GB spill at 50k vectors,
+    * disk-death at 5M). */
+  def decadeSession(cpus: Int, shufflePartitions: Int): SparkSession =
+    graft.util.GraftSession.builder(cpus)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
+        "1000000")
+      .getOrCreate()
+
   /** `runMain graft.scale.PipelineScaleProbe <mult> [passes] [q1,q2,...]`
     * — the optional query list restricts the probe (the 1000x
     * third-decade run times the five operators whose shuffles grow to
@@ -186,52 +209,8 @@ object PipelineScaleProbe {
     val onlyQ: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     graft.util.HeapWarm.pretouch()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // partition count must TRACK the decade: at 1000x a 32-partition
-    // shuffle puts ~500 MB in each task's sorter against ~450 MB of
-    // execution memory, so every sort-merge sort and sort-fallback
-    // aggregate double-writes its input to disk as spill. 4x partitions
-    // puts per-task working sets back inside memory (sorts go
-    // in-memory, spill ~0) at the same total shuffle bytes — exactly
-    // how a real cluster absorbs a decade: more tasks, not bigger ones.
-    // From 100x the same rule keeps the graph build's per-task GROUP
-    // count (distinct query_ids per bkt-partition, ~n·(P+1)/parts)
-    // inside the 1M hash-aggregate threshold — at 32 partitions the 5M
-    // build's ~2.8M groups/task would fall back to the full-stream sort.
-    val shufParts =
-      if (mult >= 100) (cpus.toInt * 4).toString else cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // k-bounded TopKOrdered aggregates (the ANN family) must HASH, not
-      // sort-fall-back, when grouping by n vectors: the default 128-key
-      // fallback threshold turns the graph build's bounded partial agg
-      // into a full-stream sort (2.7 GB spill at 50k vectors, disk-death
-      // at 5M) where the hash map costs ~400 B per group
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      // zstd shuffle/spill compression: the third-decade (1000x) probe
-      // keeps ~50 GB of live shuffle on one box; zstd halves that vs
-      // lz4 for these repetitive token/hash payloads — and it is the
-      // codec a shuffle-heavy 100 TB deployment would run anyway (CPU
-      // is idle during shuffle I/O at this shape)
-      .config("spark.io.compression.codec", "zstd")
-      // phase checkpoints store MEMORY_AND_DISK_SER (Dedup.ckptDisk);
-      // compress the serialized blocks with the same codec — the prefix/
-      // signature tables are highly repetitive hash columns
-      .config("spark.rdd.compress", "true")
-      // shuffle files are deleted only when their dependency is GC'd;
-      // with a 24g heap the JVM may not GC for the whole probe, so
-      // lineage released by localCheckpoint would otherwise stay on
-      // disk — force the ContextCleaner's periodic GC often enough to
-      // reclaim mid-query (the disk is the scarce resource here)
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = graft.util.GraftSession.defaultCpus
+    val spark = decadeSession(cpus, decadePartitions(cpus, mult))
     val dir = s"/tmp/graft_synth_${mult}x"
     val tG0 = System.nanoTime()
     SynthCorpus.generate(spark, mult, dir)

@@ -15,13 +15,7 @@ class BerlinModSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var results: Map[String, Array[org.apache.spark.sql.Row]] = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = graft.util.GraftSession(4)
     val nTrips = BerlinMod.load(spark)
     assert(nTrips > 30)
     results = BerlinMod.queries(spark).map { case (n, df) => n -> df.collect() }.toMap
@@ -103,7 +97,7 @@ class BerlinModSpec extends AnyFunSuite with BeforeAndAfterAll {
     BerlinMod.load(spark)
     val ours = BerlinMod.queries(spark).toMap
     def refSql(n: Int): String =
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      new String(java.nio.file.Files.readAllBytes(Fixtures.required(
         s"/root/reference/benchmark/BerlinMOD/sql/queries/query_$n.sql")),
         java.nio.charset.StandardCharsets.UTF_8)
         .linesIterator.filterNot(_.trim.startsWith(".")).mkString("\n")

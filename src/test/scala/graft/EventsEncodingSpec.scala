@@ -38,16 +38,7 @@ class EventsEncodingSpec extends AnyFunSuite with BeforeAndAfterAll {
     "mob_q7_when_true", "mob_q8_asof_join")
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // runtime-set too: getOrCreate may have reused another spec's session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark = graft.util.GraftSession(2)
     graft.functions.GraftFunctions.register(spark)
 
     val canonical = Tables.events(spark, sfSrc).orderBy("event_id").collect()

@@ -18,14 +18,10 @@ class FastRoundSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = graft.util.GraftSession(4)
   }
+
+  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def stock(x: Double, s: Int): Double =
     if (x.isNaN || x.isInfinite) x

@@ -26,13 +26,7 @@ class GoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
   case class Case(file: String, line: Int, sql: String, expected: String)
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = graft.util.GraftSession(2)
     GraftFunctions.register(spark)
   }
 
@@ -88,7 +82,7 @@ class GoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("reference sqllogictest corpus") {
-    val files = Files.list(Paths.get(corpusDir)).iterator().asScala.toSeq
+    val files = Files.list(Fixtures.required(corpusDir)).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".test")).sortBy(_.toString)
     val report = new StringBuilder
     var pass = 0

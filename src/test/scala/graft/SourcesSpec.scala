@@ -15,13 +15,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = graft.util.GraftSession(2)
     dir = java.nio.file.Files.createTempDirectory("mobcsv").toString
     val csv = java.nio.file.Paths.get(dir, "trips.csv")
     java.nio.file.Files.writeString(csv,

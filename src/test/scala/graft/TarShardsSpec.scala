@@ -22,13 +22,7 @@ class TarShardsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var work: String = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = graft.util.GraftSession(4)
     work = Files.createTempDirectory("tarshards").toString
   }
 
